@@ -34,7 +34,6 @@ def main() -> None:
         CsvDirSink(out_dir, coalesce=1),
         setup=lambda s: register_views(s, sf_dir),
         dialect="mysql",  # accepts both dialects; MySQL constructs translate
-        max_concurrency=2,
     )
     report = pipe.run()
     for r in report.results:

@@ -11,7 +11,9 @@ Runs every .sql file in QUERY_DIR against the parquet tables in
 reference pointing its MySQL connection at a database), upserts each
 result into OUT_DIR/<name>/, and prints the per-file report the
 reference logs (loader.py:232-249): status, rows, output size. Exit
-code 0 iff every file published.
+code 0 iff every file published. Files run concurrently on the
+session's task slots by default; ``--concurrency 1`` gives the
+reference's strict serial order (loader.py:227).
 """
 
 from __future__ import annotations
@@ -34,7 +36,13 @@ def main(argv: list[str] | None = None) -> int:
     )
     run.add_argument("--dialect", choices=("spark", "mysql"), default="mysql")
     run.add_argument("--sink", choices=("csv", "parquet", "json"), default="csv")
-    run.add_argument("--concurrency", type=int, default=1)
+    run.add_argument(
+        "--concurrency",
+        type=int,
+        default=None,
+        help="files run at once (default: the session's task slots; "
+        "1 = the reference's serial order)",
+    )
     run.add_argument("--cell-limit", type=int, default=None)
     run.add_argument(
         "--ci-collation",

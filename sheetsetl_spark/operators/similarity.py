@@ -846,6 +846,9 @@ def cosine_topk_pq(
         .collect()
     )
     u_by_id = {r["vid"]: r["u"] for r in small_rows}
+    missing = sorted({*seeds, int(query_vec_id)} - u_by_id.keys())
+    if missing:
+        raise ValueError(f"cosine operators: vector id(s) {missing} not found in {id_col}")
     qu_vec = u_by_id[int(query_vec_id)]
 
     sub_dim = 64 // m

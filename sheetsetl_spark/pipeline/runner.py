@@ -6,8 +6,8 @@ Control flow mirrors /root/reference/src/loader.py:223-255 one-to-one:
     -> execute each (cursor.execute at :231  ==>  spark.sql here)
     -> output-size guard ((rows+1)*cols >= 2M skips, :241-253)
     -> upsert into the sink by name (filename minus '.sql', :152)
-  with per-file error isolation: a syntax error (:232-234) or a sink
-  error (:184-186) logs and skips that file, never aborts the run.
+  with per-file error isolation: a syntax or execution error (:232-234)
+  or a sink error (:184-186) logs and skips that file, never aborts the run.
 
 What changes Spark-side: the execute->spool->guard steps become ONE
 Catalyst-planned job per query (no client-side row loop, no CSV spool),
@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -99,13 +100,16 @@ class SqlFolderPipeline:
     publishes whatever MySQL returns (loader.py:238-246) — this is the
     verification step between "query ran" and "sheet published".
 
-    ``max_concurrency`` > 1 runs query files concurrently from a thread
-    pool — Spark schedules concurrent jobs from one session across free
-    cores, so small queries no longer serialize behind big ones (the
-    reference is strictly serial, loader.py:227; its httplib2 workaround
-    at :208-220 even documents why it couldn't thread). Results keep
-    discovery order. Requires a thread-safe sink (the bundled local sinks
-    write disjoint per-name paths, so they are).
+    Files run on one thread pool of ``min(max_concurrency, files)``
+    threads; ``max_concurrency=None`` (the default) means the session's
+    task slots (``defaultParallelism``), and ``1`` is the reference's
+    strict serial order (loader.py:227). Spark schedules concurrent jobs
+    from one session across free cores, so small queries overlap their
+    fixed per-query cost instead of queueing. Results keep discovery
+    order. Sinks and ``validate`` hooks are called from pool threads and
+    must be thread-safe (the bundled local sinks write disjoint per-name
+    paths); :func:`~sheetsetl_spark.cache.cache_scope` is thread-local,
+    so a scope opened around ``run()`` does not reach the pool threads.
     """
 
     def __init__(
@@ -115,7 +119,7 @@ class SqlFolderPipeline:
         sink: Sink,
         cell_limit: int = DEFAULT_CELL_LIMIT,
         setup=None,
-        max_concurrency: int = 1,
+        max_concurrency: int | None = None,
         dialect: str = "spark",
         validate=None,
     ):
@@ -134,16 +138,9 @@ class SqlFolderPipeline:
         if self.setup is not None:
             self.setup(self.spark)
         files = discover_sql_files(self.source_dir)
-        report = PipelineReport()
-        if self.max_concurrency <= 1:
-            for qf in files:
-                report.results.append(self._run_one(qf))
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
-                report.results = list(pool.map(self._run_one, files))
-        return report
+        slots = self.max_concurrency or self.spark.sparkContext.defaultParallelism
+        with ThreadPoolExecutor(max_workers=max(1, min(slots, len(files)))) as pool:
+            return PipelineReport(list(pool.map(self._run_one, files)))
 
     def _run_one(self, qf: QueryFile) -> QueryResult:
         logger.info("Executing query for file %s", qf.name)
@@ -175,6 +172,9 @@ class SqlFolderPipeline:
         except CellLimitExceeded as exc:  # loader.py:250-253
             logger.error("%s over the %d-cell limit, skipping", qf.name, self.cell_limit)
             return QueryResult(qf.name, "cell_limit", error=str(exc))
+        except Exception as exc:  # execution error -> skip file (loader.py:232-234)
+            logger.exception("Execution error in %s", qf.name)
+            return QueryResult(qf.name, "sql_error", error=str(exc))
         if self.validate is not None:
             try:
                 self.validate(qf.name, df)

@@ -33,6 +33,8 @@ import hashlib
 import json
 import os
 import secrets
+import tempfile
+import threading
 import time
 import urllib.parse
 import urllib.request
@@ -84,18 +86,27 @@ class FileTokenStore:
             return None  # corrupt store == no credential (store.get() parity)
 
     def put(self, creds: Credentials) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = f"{self.path}.tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "access_token": creds.access_token,
-                    "refresh_token": creds.refresh_token,
-                    "expiry": creds.expiry,
-                },
-                fh,
-            )
-        os.replace(tmp, self.path)  # atomic: a crash never corrupts the store
+        directory = os.path.dirname(self.path) or "."
+        os.makedirs(directory, exist_ok=True)
+        # a unique temp file per writer: concurrent refreshes never move
+        # each other's file away before the os.replace
+        fd, tmp = tempfile.mkstemp(
+            dir=directory, prefix=os.path.basename(self.path) + ".", suffix=".tmp"
+        )
+        try:
+            with os.fdopen(fd, "w", encoding="utf-8") as fh:
+                json.dump(
+                    {
+                        "access_token": creds.access_token,
+                        "refresh_token": creds.refresh_token,
+                        "expiry": creds.expiry,
+                    },
+                    fh,
+                )
+            os.replace(tmp, self.path)  # atomic: a crash never corrupts the store
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
 
 class OAuthTokenProvider:
@@ -105,7 +116,11 @@ class OAuthTokenProvider:
 
     ``consent_url`` is only used to build the actionable
     InteractiveConsentRequired message when no refreshable credential
-    exists (the reference prints the flow URL and exits)."""
+    exists (the reference prints the flow URL and exits).
+
+    Thread-safe: the pipeline uploads from several threads at once, so
+    one thread refreshes under a lock while the others wait and re-read
+    the store it wrote."""
 
     def __init__(
         self,
@@ -122,34 +137,41 @@ class OAuthTokenProvider:
         self.client_secret = client_secret
         self.consent_url = consent_url
         self.timeout = timeout
+        self._lock = threading.Lock()
 
     def __call__(self) -> str:
         creds = self.store.get()
-        if creds is None or (not creds.valid() and not creds.refresh_token):
-            raise InteractiveConsentRequired(
-                "no stored credential"
-                + (f"; complete consent at {self.consent_url} and re-run"
-                   if self.consent_url else "; complete the consent flow and re-run")
-            )
-        if creds.valid():
+        if creds is not None and creds.valid():
             return creds.access_token
-        refreshed = self._refresh(creds.refresh_token)
-        self.store.put(refreshed)
-        return refreshed.access_token
+        with self._lock:
+            creds = self.store.get()  # another thread may have refreshed
+            if creds is None or (not creds.valid() and not creds.refresh_token):
+                raise InteractiveConsentRequired(
+                    "no stored credential"
+                    + (f"; complete consent at {self.consent_url} and re-run"
+                       if self.consent_url else "; complete the consent flow and re-run")
+                )
+            if creds.valid():
+                return creds.access_token
+            return self._refresh_and_store(creds.refresh_token)
 
     def force_refresh(self) -> str:
         """Refresh even if the stored expiry claims validity — the
         server 401'd, so the local clock/expiry is wrong. Used by
-        HttpDriveClient's one-retry-on-401 path."""
-        creds = self.store.get()
-        if creds is None or not creds.refresh_token:
-            raise InteractiveConsentRequired(
-                "credential rejected by the server and no refresh token "
-                "stored; complete the consent flow and re-run"
-            )
-        refreshed = self._refresh(creds.refresh_token)
-        self.store.put(refreshed)
-        return refreshed.access_token
+        HttpDriveClient's one-retry-on-401 path. A thread that waited on
+        the lock while another refreshed uses the new token instead of
+        refreshing again."""
+        rejected = self.store.get()
+        with self._lock:
+            creds = self.store.get()
+            if creds is None or not creds.refresh_token:
+                raise InteractiveConsentRequired(
+                    "credential rejected by the server and no refresh token "
+                    "stored; complete the consent flow and re-run"
+                )
+            if rejected and creds.access_token != rejected.access_token and creds.valid():
+                return creds.access_token
+            return self._refresh_and_store(creds.refresh_token)
 
     def run_console_consent(
         self,
@@ -227,6 +249,11 @@ class OAuthTokenProvider:
         )
         self.store.put(creds)
         return creds
+
+    def _refresh_and_store(self, refresh_token: str) -> str:
+        refreshed = self._refresh(refresh_token)
+        self.store.put(refreshed)
+        return refreshed.access_token
 
     def _refresh(self, refresh_token: str) -> Credentials:
         body = urllib.parse.urlencode(

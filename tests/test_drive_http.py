@@ -423,6 +423,33 @@ def test_401_forces_refresh_and_retries(tmp_path, token_server):
     assert len(state["token_requests"]) == 1  # exactly one forced refresh
 
 
+def test_concurrent_expired_calls_refresh_once(tmp_path, token_server):
+    """Pool threads uploading at once all find the credential expired:
+    one refreshes, the others wait and re-read the store it wrote."""
+    state, base = token_server
+    store, provider = _provider(tmp_path, base, expiry=0.0)
+    start = threading.Barrier(8)
+    tokens, errors = [], []
+
+    def call():
+        start.wait()
+        try:
+            tokens.append(provider())
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert len(state["token_requests"]) == 1
+    assert tokens == ["access-1"] * 8
+    assert store.get().valid() and store.get().access_token == "access-1"
+    assert sorted(p.name for p in (tmp_path / "creds").iterdir()) == ["sheets-etl.json"]
+
+
 def test_console_consent_flow_bootstraps_credential(tmp_path, token_server):
     """The A11 gap-closer: with NO stored credential, run_console_consent
     prints a PKCE consent URL, exchanges the pasted code at the token
@@ -518,6 +545,43 @@ def test_503_then_short_write_interleaved_on_resume(spark, fake_drive):
 # Google's documented Drive v3 rate-limit responses: the client must back
 # off (honoring a numeric Retry-After when present) and retry a bounded
 # number of times; a PLAIN 403 is permission-denied and must fail fast.
+
+
+def test_pipeline_default_pool_publishes_each_name_once(spark, fake_drive, tmp_path):
+    """A folder published through the Sheets sink over HTTP under the
+    default pool (files overlap): every name is uploaded exactly once, the
+    pre-existing sheet is updated in place, and no duplicate appears."""
+    from sheetsetl_spark.catalog import register_views
+    from sheetsetl_spark.pipeline import SqlFolderPipeline
+    from tests.conftest import SF_SMALL
+
+    state, base = fake_drive
+    state.files["file0"] = {
+        "id": "file0", "name": "q2", "mimeType": SPREADSHEET_MIME,
+        "parents": ["folder1"],
+    }
+    d = tmp_path / "sql"
+    d.mkdir()
+    names = [f"q{i}" for i in range(6)]
+    for i, name in enumerate(names):
+        (d / f"{name}.sql").write_text(
+            f"SELECT r_regionkey, r_name FROM region WHERE r_regionkey >= {i % 5}"
+        )
+    report = SqlFolderPipeline(
+        spark,
+        str(d),
+        GoogleSheetsSink("folder1", client=_client(base), chunk_size=32),
+        setup=lambda s: register_views(s, SF_SMALL, ("region",)),
+    ).run()
+    assert [(r.name, r.status) for r in report.results] == [(n, "ok") for n in names]
+    uploaded = sorted(sess["meta"]["name"] for sess in state.sessions.values())
+    assert uploaded == names
+    sheets = [f for f in state.files.values() if f["mimeType"] == SPREADSHEET_MIME]
+    assert sorted(f["name"] for f in sheets) == names
+    assert next(f["id"] for f in sheets if f["name"] == "q2") == "file0"
+    for f in sheets:
+        rows = report.results[names.index(f["name"])].rows
+        assert len(state.payloads[f["id"]].decode().splitlines()) == rows + 1
 
 
 def _rl_client(base, **kw):

@@ -1089,6 +1089,19 @@ def test_cosine_operators_reject_zero_norm_vectors(spark):
         cosine_topk_pq(emb64, 0, [1, 2], k=2)
 
 
+def test_cosine_topk_pq_rejects_absent_ids(spark):
+    """An absent query or seed id fails as the family's ValueError naming
+    every missing id, not as a KeyError from the collected seed map."""
+    emb64 = spark.createDataFrame(
+        [(i, [float(i + 1)] * 64) for i in range(5)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match=r"vector id\(s\) \[99\] not found in vec_id"):
+        similarity.cosine_topk_pq(emb64, 99, [1, 2], k=2)
+    with pytest.raises(ValueError, match=r"\[7, 8\] not found"):
+        similarity.cosine_topk_pq(emb64, 0, [1, 8, 7], k=2)
+
+
 def test_quality_checks_detect_violations(spark):
     from sheetsetl_spark.operators import quality_checks as qc
 

@@ -4,6 +4,8 @@ error isolation, cell guard, upsert-by-name semantics."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from sheetsetl_spark.catalog import register_views
@@ -89,9 +91,11 @@ def test_cell_guard_counts_header(spark):
 class FakeDrive:
     """In-memory DriveClient reproducing the paged-list + resumable-
     chunked-upload protocol (page_size controls listing pagination;
-    fail_chunks holds (offset, n_failures) transient-error injections)."""
+    fail_chunks holds (offset, n_failures) transient-error injections).
+    Locked, because the pipeline calls its sink from pool threads."""
 
     def __init__(self, page_size=100, fail_chunks=None):
+        self._lock = threading.Lock()
         self.files: dict[str, dict] = {}
         self.payloads: dict[str, bytes] = {}
         self.counter = 0
@@ -101,35 +105,38 @@ class FakeDrive:
         self._fail_chunks = dict(fail_chunks or {})
 
     def list_files(self, folder_id, page_token=None):
-        self.list_calls += 1
-        matches = [f for f in self.files.values() if folder_id in f.get("parents", [])]
+        with self._lock:
+            self.list_calls += 1
+            matches = [f for f in self.files.values() if folder_id in f.get("parents", [])]
         start = int(page_token or 0)
         page = matches[start : start + self.page_size]
         nxt = start + self.page_size
         return page, (str(nxt) if nxt < len(matches) else None)
 
     def start_upload(self, metadata, file_id=None):
-        if file_id is not None:
-            assert "parents" not in metadata  # loader.py:170: update strips parents
-            self.files[file_id].update(metadata)
-        else:
-            self.counter += 1
-            file_id = f"id{self.counter}"
-            self.files[file_id] = {**metadata, "id": file_id}
+        with self._lock:
+            if file_id is not None:
+                assert "parents" not in metadata  # loader.py:170: update strips parents
+                self.files[file_id].update(metadata)
+            else:
+                self.counter += 1
+                file_id = f"id{self.counter}"
+                self.files[file_id] = {**metadata, "id": file_id}
         return {"file_id": file_id, "buf": bytearray()}
 
     def upload_chunk(self, session, chunk, offset, total):
         from sheetsetl_spark.sinks.sheets import TransientUploadError
 
-        self.chunk_log.append((offset, len(chunk)))
-        if self._fail_chunks.get(offset, 0) > 0:
-            self._fail_chunks[offset] -= 1
-            raise TransientUploadError(f"injected failure at offset {offset}")
-        assert offset == len(session["buf"])  # resumable: chunks in order
-        session["buf"] += chunk
-        if len(session["buf"]) >= total:
-            self.payloads[session["file_id"]] = bytes(session["buf"])
-            return session["file_id"]
+        with self._lock:
+            self.chunk_log.append((offset, len(chunk)))
+            if self._fail_chunks.get(offset, 0) > 0:
+                self._fail_chunks[offset] -= 1
+                raise TransientUploadError(f"injected failure at offset {offset}")
+            assert offset == len(session["buf"])  # resumable: chunks in order
+            session["buf"] += chunk
+            if len(session["buf"]) >= total:
+                self.payloads[session["file_id"]] = bytes(session["buf"])
+                return session["file_id"]
         return None
 
 
@@ -222,6 +229,90 @@ def test_pipeline_concurrent_matches_serial(spark, sql_dir, tmp_path):
         ("top_nations", "ok"),
     ]
     assert spark.read.parquet(str(tmp_path / "out_conc" / "top_nations")).count() == 5
+
+
+class _RecordingSink:
+    """Records each published name and the thread that published it."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self.writes: list[tuple[str, int]] = []
+
+    def write(self, df, name):
+        df.collect()
+        with self._lock:
+            self.writes.append((name, threading.get_ident()))
+
+
+def _select_folder(tmp_path, n):
+    d = tmp_path / "select_sql"
+    d.mkdir()
+    for i in range(n):
+        (d / f"q{i:02d}.sql").write_text(f"SELECT {i} AS k")
+    return d
+
+
+@pytest.mark.parametrize("n_files", [3, 12])
+def test_pipeline_default_pool_is_task_slots(spark, tmp_path, monkeypatch, n_files):
+    """With no max_concurrency the pool holds min(defaultParallelism,
+    files) threads, and results keep discovery order."""
+    from sheetsetl_spark.pipeline import runner
+
+    sizes = []
+
+    class _Pool(runner.ThreadPoolExecutor):
+        def __init__(self, max_workers):
+            sizes.append(max_workers)
+            super().__init__(max_workers=max_workers)
+
+    monkeypatch.setattr(runner, "ThreadPoolExecutor", _Pool)
+    sink = _RecordingSink()
+    report = SqlFolderPipeline(spark, str(_select_folder(tmp_path, n_files)), sink).run()
+    assert sizes == [min(spark.sparkContext.defaultParallelism, n_files)]
+    names = [f"q{i:02d}" for i in range(n_files)]
+    assert [(r.name, r.status, r.rows) for r in report.results] == [(n, "ok", 1) for n in names]
+    assert sorted(name for name, _ in sink.writes) == names
+
+
+def test_pipeline_concurrency_one_is_serial(spark, tmp_path, monkeypatch):
+    """max_concurrency=1 keeps the reference's strict serial order: every
+    file runs on the same thread, in discovery order."""
+    calls = []
+    run_one = SqlFolderPipeline._run_one
+
+    def _recording_run_one(self, qf):
+        calls.append((qf.name, threading.get_ident()))
+        return run_one(self, qf)
+
+    monkeypatch.setattr(SqlFolderPipeline, "_run_one", _recording_run_one)
+    sink = _RecordingSink()
+    SqlFolderPipeline(
+        spark, str(_select_folder(tmp_path, 5)), sink, max_concurrency=1
+    ).run()
+    names = [f"q{i:02d}" for i in range(5)]
+    assert [name for name, _ in calls] == names
+    assert len({ident for _, ident in calls}) == 1
+    assert [name for name, _ in sink.writes] == names
+
+
+@pytest.mark.parametrize("max_concurrency", [1, None])
+def test_pipeline_guard_execution_error_is_isolated(spark, tmp_path, max_concurrency):
+    """A query that analyzes but fails when the guard's count() executes
+    records sql_error for that file only; the run goes on (loader.py:
+    232-234 treats an execute failure the same way)."""
+    d = tmp_path / "exec_sql"
+    d.mkdir()
+    (d / "assert_fails.sql").write_text(
+        "SELECT id FROM range(5) WHERE assert_true(id < 2) IS NULL"
+    )
+    (d / "good.sql").write_text("SELECT 1 AS one")
+    sink = _RecordingSink()
+    report = SqlFolderPipeline(spark, str(d), sink, max_concurrency=max_concurrency).run()
+    by_name = {r.name: r for r in report.results}
+    assert by_name["assert_fails"].status == "sql_error"
+    assert "USER_RAISED_EXCEPTION" in by_name["assert_fails"].error
+    assert (by_name["good"].status, by_name["good"].rows) == ("ok", 1)
+    assert [name for name, _ in sink.writes] == ["good"]
 
 
 def test_pipeline_mysql_dialect(spark, tmp_path):
